@@ -10,16 +10,21 @@ countmin/sketch.rs:246).
 Execution shape (scale rationale):
   1. PARTIAL — ``mapInPandas`` over the scan: each Arrow batch is reduced
      to one serialized sketch per group key **before any shuffle** (map-side
-     combine). What travels through the exchange is O(#groups x #partitions)
-     sketch blobs, never raw rows — the same serialize/move/deserialize seam
-     the reference acknowledges as its only process boundary
-     (SURVEY.md §3.2 step 1).
+     combine). The batch's values are hashed in one vectorized pass (a
+     numeric column never goes through per-value Python), its rows are
+     split by group with one stable sort, and each group's sketch is
+     built from its slice of the hashes. What travels through the
+     exchange is O(#groups x #batches) sketch blobs, never raw rows — the
+     same serialize/move/deserialize seam the reference acknowledges as
+     its only process boundary (SURVEY.md §3.2 step 1).
   2. (optional) SALTED INTERMEDIATE — for low-cardinality keys at very high
      partition counts, a two-level groupBy((key, salt)) -> groupBy(key)
      treeReduce keeps any single reducer from absorbing all partials.
-  3. FINAL — ``applyInPandas`` per key: deserialize + fold merge + emit
-     either the serialized union (for further merging / checkpointing) or
-     the finished estimate.
+  3. FINAL — ``applyInPandas`` per key: deserialize the group's blobs,
+     union them in one call (theta: the minimum theta and one sort-unique
+     over all entries; the other families fold pairwise), and emit the
+     serialized union for further merging, checkpointing or a finisher
+     UDF.
 
 All sketch configs are fixed at plan time and closed over by the UDFs, so
 every executor builds byte-compatible states (seed-hash checked at merge,
@@ -28,138 +33,177 @@ as theta/intersection.rs:81-87 demands).
 
 from __future__ import annotations
 
+import functools
 from typing import Callable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (BinaryType, DoubleType, LongType, StructField,
-                               StructType)
+from pyspark.sql.types import (BinaryType, DoubleType, IntegralType,
+                               LongType, StructField, StructType)
 
 from datasketches_rust_spark.hashing import (DEFAULT_SEED, encode_values,
-                                             hash_bytes_list,
-                                             murmur128_bytes_list)
-from datasketches_rust_spark.sketches.bloom import BloomFilter
+                                             key_matrices, murmur128_values)
+from datasketches_rust_spark.sketches.bloom import BloomFilter, base_hashes
 from datasketches_rust_spark.sketches.countmin import CountMinSketch
 from datasketches_rust_spark.sketches.cpc import CpcSketch
 from datasketches_rust_spark.sketches.frequencies import FrequentItemsSketch
-from datasketches_rust_spark.sketches.hll import HllSketch, coupons_from_keys
-from datasketches_rust_spark.sketches.minhash import merge as mh_merge
+from datasketches_rust_spark.sketches.hll import HllSketch, coupons_from_hashes
 from datasketches_rust_spark.sketches.tdigest import TDigest
 from datasketches_rust_spark.sketches.theta import ThetaSketch
-from datasketches_rust_spark.sketches.util import clz64
 
 SKETCH_COL = "sketch"
 
 
 # ---------------------------------------------------------------------------
-# per-kind (build, update_series, merge, deserialize) drivers
+# per-kind (build, prepare, ingest, merge, deserialize) lifecycles
 # ---------------------------------------------------------------------------
 
+def _fold(op: Callable) -> Callable:
+    """A list merge that folds the two-sketch ``op`` left to right."""
+    return lambda sketches: functools.reduce(op, sketches)
+
+
 class _Kind:
-    def __init__(self, build: Callable, update: Callable,
-                 deserialize: Callable):
+    """One sketch family at a fixed config.
+
+    ``prepare`` turns a value column into what the sketch ingests — the
+    hashes (or coupons, or bucket indices) of its non-null values, or the
+    non-null raw values for freqitems and tdigest — as one array whose
+    rows follow the non-null values, so a batch is hashed once and then
+    sliced per group. ``update_prepared`` ingests such a slice, and
+    ``merge`` unions a list of sketches into one.
+    """
+
+    def __init__(self, build: Callable, prepare: Callable, ingest: Callable,
+                 merge: Callable, deserialize: Callable):
         self.build = build
-        self.update = update
+        self._prepare = prepare
+        self._ingest = ingest
+        self._merge = merge
         self.deserialize = deserialize
 
+    def prepare(self, values: pd.Series) -> np.ndarray:
+        return self._prepare(values.dropna())
 
-def _theta_update(sk: ThetaSketch, values: pd.Series) -> None:
-    vals = values.dropna()
-    if len(vals):
-        sk.update_hashes(hash_bytes_list(encode_values(vals), sk.seed))
+    def update_prepared(self, sk, prepared: np.ndarray) -> None:
+        if len(prepared):
+            self._ingest(sk, prepared)
 
+    def update(self, sk, values: pd.Series) -> None:
+        self.update_prepared(sk, self.prepare(values))
 
-def _cpc_update(sk: CpcSketch, values: pd.Series) -> None:
-    vals = values.dropna()
-    if len(vals):
-        h1, h2 = murmur128_bytes_list(encode_values(vals), sk.seed)
-        sk.update_hashes(h1, h2)
-
-
-def _hll_update(sk: HllSketch, values: pd.Series) -> None:
-    vals = values.dropna()
-    if not len(vals):
-        return
-    h1, h2 = murmur128_bytes_list(encode_values(vals), sk.seed)
-    slots = (h1 & np.uint64(sk.k - 1)).astype(np.int64)
-    v = np.minimum(clz64(h2), 62).astype(np.uint8) + np.uint8(1)
-    sk.update_coupons(slots, v)
-
-
-def _bloom_update(sk: BloomFilter, values: pd.Series) -> None:
-    vals = values.dropna()
-    if not len(vals):
-        return
-    from datasketches_rust_spark.hashing import _grouped_by_length
-    for grp, mat in _grouped_by_length(encode_values(vals)):
-        sk.insert_keys(mat)
-
-
-def _countmin_update(sk: CountMinSketch, values: pd.Series) -> None:
-    vals = values.dropna()
-    if len(vals):
-        # raw byte items, NOT a pre-hash: the sketch hashes them with its
-        # per-row murmur seeds, so the state is bit-identical to a
-        # reference sketch updated with the same items
-        sk.update_keys(encode_values(vals))
-
-
-def _freq_update(sk: FrequentItemsSketch, values: pd.Series) -> None:
-    counts = values.dropna().value_counts()  # batch pre-reduction
-    if len(counts):
-        sk.update_counts(list(counts.index), counts.to_numpy())
-
-
-def _tdigest_update(sk: TDigest, values: pd.Series) -> None:
-    sk.update_values(values.dropna().to_numpy(dtype=np.float64))
+    def merge(self, sketches: list):
+        """One sketch holding the union of ``sketches``; a single sketch
+        is returned as it is."""
+        return sketches[0] if len(sketches) == 1 else self._merge(sketches)
 
 
 def sketch_kind(kind: str, **kw) -> _Kind:
     seed = kw.pop("seed", DEFAULT_SEED)
+    union = _fold(lambda a, b: a.union(b))
     if kind == "theta":
         lg_k = kw.pop("lg_k", 12)
         return _Kind(lambda: ThetaSketch(lg_k=lg_k, seed=seed),
-                     _theta_update,
+                     lambda v: murmur128_values(v, seed)[0] >> np.uint64(1),
+                     ThetaSketch.update_hashes,
+                     ThetaSketch.union_all,
                      lambda b: ThetaSketch.deserialize(b, seed))
     if kind == "hll":
         lg_k = kw.pop("lg_k", 12)
         return _Kind(lambda: HllSketch(lg_k=lg_k, seed=seed),
-                     _hll_update,
+                     lambda v: np.column_stack(coupons_from_hashes(
+                         *murmur128_values(v, seed), lg_k)),
+                     lambda sk, c: sk.update_coupons(c[:, 0], c[:, 1]),
+                     union,
                      lambda b: HllSketch.deserialize(b, seed))
     if kind == "cpc":
         lg_k = kw.pop("lg_k", 11)
         return _Kind(lambda: CpcSketch(lg_k=lg_k, seed=seed),
-                     _cpc_update,
+                     lambda v: np.column_stack(murmur128_values(v, seed)),
+                     lambda sk, h: sk.update_hashes(h[:, 0], h[:, 1]),
+                     union,
                      lambda b: CpcSketch.deserialize(b, seed))
     if kind == "bloom":
         num_bits = kw.pop("num_bits")
         num_hashes = kw.pop("num_hashes")
         return _Kind(lambda: BloomFilter(num_bits, num_hashes, seed),
-                     _bloom_update,
+                     lambda v: _per_key_rows(v, 2, lambda m: np.column_stack(
+                         base_hashes(m, seed))),
+                     lambda sk, h: sk.insert_hashes(h[:, 0], h[:, 1]),
+                     union,
                      lambda b: BloomFilter.deserialize(b, seed))
     if kind == "countmin":
         nh, nb = kw.pop("num_hashes"), kw.pop("num_buckets")
+        rows_of = CountMinSketch(nh, nb, seed).bucket_rows
         return _Kind(lambda: CountMinSketch(nh, nb, seed),
-                     _countmin_update,
+                     lambda v: _per_key_rows(v, nh, lambda m: rows_of(m).T),
+                     lambda sk, r: sk.update_buckets(r.T),
+                     _fold(lambda a, b: a.merge(b)),
                      lambda b: CountMinSketch.deserialize(b, seed))
     if kind == "freqitems":
         m = kw.pop("max_map_size", 256)
         return _Kind(lambda: FrequentItemsSketch(m),
-                     _freq_update,
+                     pd.Series.to_numpy,
+                     _freq_ingest,
+                     _fold(lambda a, b: a.merge(b)),
                      FrequentItemsSketch.deserialize)
     if kind == "tdigest":
         k = kw.pop("k", 200)
         return _Kind(lambda: TDigest(k=k),
-                     _tdigest_update,
+                     lambda v: v.to_numpy(dtype=np.float64),
+                     TDigest.update_values,
+                     _fold(lambda a, b: a.merge(b)),
                      TDigest.deserialize)
     raise ValueError(f"unknown sketch kind {kind!r}")
 
 
-def _merge_two(kind_name: str, a, b):
-    if kind_name in ("theta", "hll", "bloom", "cpc"):
-        return a.union(b)
-    return a.merge(b)
+def _per_key_rows(values: pd.Series, width: int,
+                  rows_of: Callable) -> np.ndarray:
+    """(N, width) uint64: ``rows_of`` applied to every key matrix of
+    ``values`` (a numeric column is a single one), in value order."""
+    out = np.empty((len(values), width), dtype=np.uint64)
+    for grp, mat in key_matrices(values):
+        out[grp] = rows_of(mat)
+    return out
+
+
+def _freq_ingest(sk: FrequentItemsSketch, values: np.ndarray) -> None:
+    counts = pd.Series(values).value_counts()  # slice pre-reduction
+    sk.update_counts(list(counts.index), counts.to_numpy())
+
+
+def _group_codes(keys: pd.DataFrame) -> np.ndarray:
+    """Group number of each row, numbered in order of first appearance;
+    a null key is a group of its own, and no key columns is one group."""
+    if keys.columns.empty:
+        return np.zeros(len(keys), dtype=np.intp)
+    return keys.groupby(list(keys.columns), sort=False,
+                        dropna=False).ngroup().to_numpy()
+
+
+def _batch_partials(knd: _Kind, keys: pd.DataFrame, values: pd.Series,
+                    has: np.ndarray) -> pd.DataFrame:
+    """One serialized sketch per group of ``keys`` in one Arrow batch, as
+    DataFrame[keys..., sketch]; ``has`` marks the rows whose value is not
+    null. The batch is hashed in one pass and its rows sorted by group
+    once; each group's sketch is built from its slice of the hashes. A
+    group whose values are all null gets an empty sketch."""
+    codes = _group_codes(keys)
+    order = np.argsort(codes, kind="stable")
+    starts = np.flatnonzero(np.diff(codes[order], prepend=-1))
+    prepared = knd.prepare(values[has])
+    rank = np.cumsum(has) - 1    # row -> its row in ``prepared``
+    rows = order[has[order]]     # the non-null rows, by group
+    sizes = np.bincount(codes[rows], minlength=len(starts))
+    blobs = []
+    for part in np.split(prepared[rank[rows]], np.cumsum(sizes)[:-1]):
+        sk = knd.build()
+        knd.update_prepared(sk, part)
+        blobs.append(sk.serialize())
+    out = keys.iloc[order[starts]].reset_index(drop=True)
+    out[SKETCH_COL] = blobs
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -175,34 +219,27 @@ def sketch_agg(df: DataFrame, key_cols: list[str], value_col: str,
     treeReduce intermediate level.
     """
     knd = sketch_kind(kind, **dict(sketch_kw))
-    kind_name = kind
 
     from datasketches_rust_spark.pipeline import ensure_parallelism
-    keyed = ensure_parallelism(
-        df.select(*key_cols, F.col(value_col).alias("__v")))
+    # Arrow hands an integral column that holds a null to pandas as
+    # float64, which would hash its values as doubles; so an integral
+    # value travels null-free (a null as 0) next to a null flag
+    value = F.col(value_col)
+    integral = isinstance(df.schema[value_col].dataType, IntegralType)
+    cols = ([F.coalesce(value, F.lit(0)).alias("__v"),
+             value.isNull().alias("__null")] if integral
+            else [value.alias("__v")])
+    keyed = ensure_parallelism(df.select(*key_cols, *cols))
     key_fields = [keyed.schema[c] for c in key_cols]
     partial_schema = StructType(
         list(key_fields) + [StructField(SKETCH_COL, BinaryType(), False)])
 
-    const_key = not key_cols
-
     def partial_iter(batches):
         for pdf in batches:
-            if pdf.empty:
-                continue
-            if const_key:
-                sk = knd.build()
-                knd.update(sk, pdf["__v"])
-                yield pd.DataFrame({SKETCH_COL: [sk.serialize()]})
-                continue
-            rows = []
-            for key, sub in pdf.groupby(key_cols, dropna=False, sort=False):
-                if not isinstance(key, tuple):
-                    key = (key,)
-                sk = knd.build()
-                knd.update(sk, sub["__v"])
-                rows.append((*key, sk.serialize()))
-            yield pd.DataFrame(rows, columns=[*key_cols, SKETCH_COL])
+            if not pdf.empty:
+                has = (~pdf["__null"].to_numpy() if integral
+                       else pdf["__v"].notna().to_numpy())
+                yield _batch_partials(knd, pdf[key_cols], pdf["__v"], has)
 
     partials = keyed.mapInPandas(partial_iter, schema=partial_schema)
     return merge_sketch_col(partials, key_cols, kind,
@@ -214,57 +251,30 @@ def merge_sketch_col(df: DataFrame, key_cols: list[str], kind: str,
                      **sketch_kw) -> DataFrame:
     """Merge a binary sketch column down to one sketch per key."""
     knd = sketch_kind(kind, **dict(sketch_kw))
-    kind_name = kind
 
-    out_fields = ([df.schema[c] for c in key_cols]
-                  + [StructField(sketch_col, BinaryType(), False)])
-    out_schema = StructType(out_fields)
+    def merge_groups(frame: DataFrame, keys: list[str]) -> DataFrame:
+        """One row per group of ``keys``: its keys and the union of its
+        sketches, deserialized and merged in one call."""
+        def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+            merged = knd.merge([knd.deserialize(bytes(b))
+                                for b in pdf[sketch_col]])
+            head = pdf.iloc[[0]][keys].reset_index(drop=True)
+            head[sketch_col] = [merged.serialize()]
+            return head
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for blob in pdf[sketch_col]:
-            sk = knd.deserialize(bytes(blob))
-            acc = sk if acc is None else _merge_two(kind_name, acc, sk)
-        head = pdf.iloc[[0]][key_cols].reset_index(drop=True)
-        head[sketch_col] = [acc.serialize()]
-        return head
+        schema = StructType([frame.schema[c] for c in keys]
+                            + [StructField(sketch_col, BinaryType(), False)])
+        return frame.groupBy(*keys).applyInPandas(merge_group, schema)
 
-    if not key_cols:
-        # global: constant key; optionally tree-reduce through a salt level
-        work = df.withColumn("__k", F.lit(0))
-        if salt_buckets > 1:
-            salted = work.withColumn(
-                "__salt", F.spark_partition_id() % salt_buckets)
-            lvl1_schema = StructType(
-                [StructField("__k", LongType(), False),
-                 StructField("__salt", LongType(), False),
-                 StructField(sketch_col, BinaryType(), False)])
-
-            def merge_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-                acc = None
-                for blob in pdf[sketch_col]:
-                    sk = knd.deserialize(bytes(blob))
-                    acc = sk if acc is None else _merge_two(kind_name, acc, sk)
-                return pd.DataFrame({"__k": [0], "__salt": [pdf["__salt"].iloc[0]],
-                                     sketch_col: [acc.serialize()]})
-
-            work = salted.groupBy("__k", "__salt").applyInPandas(
-                merge_salted, lvl1_schema).drop("__salt")
-        final_schema = StructType(
-            [StructField("__k", LongType(), False),
-             StructField(sketch_col, BinaryType(), False)])
-
-        def merge_global(pdf: pd.DataFrame) -> pd.DataFrame:
-            acc = None
-            for blob in pdf[sketch_col]:
-                sk = knd.deserialize(bytes(blob))
-                acc = sk if acc is None else _merge_two(kind_name, acc, sk)
-            return pd.DataFrame({"__k": [0], sketch_col: [acc.serialize()]})
-
-        return work.groupBy("__k").applyInPandas(
-            merge_global, final_schema).drop("__k")
-
-    return df.groupBy(*key_cols).applyInPandas(merge_group, out_schema)
+    if key_cols:
+        return merge_groups(df, key_cols)
+    # global: constant key; optionally tree-reduce through a salt level
+    work = df.withColumn("__k", F.lit(0))
+    if salt_buckets > 1:
+        work = merge_groups(work.withColumn(
+            "__salt", F.spark_partition_id() % salt_buckets),
+            ["__k", "__salt"]).drop("__salt")
+    return merge_groups(work, ["__k"]).drop("__k")
 
 
 # ---------------------------------------------------------------------------

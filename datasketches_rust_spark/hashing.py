@@ -17,6 +17,8 @@ semantics we need (pinned by tests so a numpy behavior change is caught).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 np.seterr(over="ignore")  # uint64 wraparound is the intended mod-2^64 semantics
@@ -171,6 +173,8 @@ def hash_bytes_list(keys: list[bytes], seed: int = DEFAULT_SEED) -> np.ndarray:
 def _grouped_by_length(keys: list[bytes]):
     """Yield (group_indices, (G, L) uint8 matrix) per distinct key length."""
     n = len(keys)
+    if n == 0:
+        return
     lengths = np.fromiter((len(k) for k in keys), dtype=np.int64, count=n)
     order = np.argsort(lengths, kind="stable")
     bounds = np.flatnonzero(np.diff(lengths[order])) + 1
@@ -181,6 +185,48 @@ def _grouped_by_length(keys: list[bytes]):
         else:
             buf = b"".join(keys[int(i)] for i in grp)
             yield grp, np.frombuffer(buf, dtype=np.uint8).reshape(-1, length)
+
+
+def encode_numeric(values: np.ndarray) -> np.ndarray | None:
+    """The (N, 8) uint8 matrix whose rows are ``encode_values`` of a
+    numeric numpy column, built without a per-value loop: ints and bools
+    sign-extended to int64 LE, floats as canonical f64 (-0.0 -> +0.0,
+    every NaN payload -> 0x7ff8000000000000). None for any other dtype."""
+    kind = values.dtype.kind
+    if kind in "biu":
+        words = values.astype("<i8")  # uint64 wraps, as np.int64(v) does
+    elif kind == "f":
+        with np.errstate(invalid="ignore"):  # a signalling NaN is fine
+            f = values.astype("<f8") + 0.0  # IEEE: -0.0 + 0.0 == +0.0
+        words = f.view("<u8")
+        words[np.isnan(f)] = 0x7FF8000000000000
+    else:
+        return None
+    return words.view(np.uint8).reshape(-1, 8)
+
+
+def key_matrices(values):
+    """Yield (indices, (G, L) uint8 matrix) pairs that together cover the
+    ``encode_values`` keys of ``values``: a numeric numpy column or
+    Series is one (N, 8) matrix, anything else is encoded per value and
+    grouped by key length."""
+    if hasattr(values, "dtype"):
+        mat = encode_numeric(np.asarray(values))
+        if mat is not None:
+            yield slice(None), mat
+            return
+    yield from _grouped_by_length(encode_values(values))
+
+
+def murmur128_values(values, seed: int = DEFAULT_SEED
+                     ) -> tuple[np.ndarray, np.ndarray]:
+    """(h1, h2) of the ``encode_values`` keys of ``values``, hashing a
+    numeric column as one matrix (see ``key_matrices``)."""
+    h1 = np.empty(len(values), dtype=np.uint64)
+    h2 = np.empty(len(values), dtype=np.uint64)
+    for grp, mat in key_matrices(values):
+        h1[grp], h2[grp] = murmur3_x64_128_matrix(mat, seed)
+    return h1, h2
 
 
 def murmur128_bytes_list(keys: list[bytes], seed: int = DEFAULT_SEED
@@ -362,6 +408,7 @@ def xxhash64(key: bytes, seed: int = 0) -> int:
     return int(xxhash64_matrix(arr, seed)[0])
 
 
+@functools.lru_cache(maxsize=64)
 def compute_seed_hash(seed: int) -> int:
     """16-bit seed fingerprint, must be nonzero (hash/mod.rs:72-81)."""
     h1, _ = murmur3_x64_128(np.uint64(seed).tobytes(), seed=0)

@@ -54,6 +54,16 @@ def suggest_num_hashes_from_fpp(fpp: float) -> int:
     return min(max(k, MIN_NUM_HASHES), MAX_NUM_HASHES)
 
 
+def base_hashes(data: np.ndarray, seed: int = DEFAULT_SEED
+                ) -> tuple[np.ndarray, np.ndarray]:
+    """(N, L) uint8 keys -> (h0, h1), the reference's exact two-hash
+    scheme (bloom/sketch.rs:494-510 compute_hash): h0 = xx(key, seed),
+    h1 = xx(key, h0) — the second pass is reseeded per key with the
+    first hash. Bit-compatible with reference-built filters."""
+    h0 = xxhash64_matrix(data, seed)
+    return h0, xxhash64_matrix(data, h0)
+
+
 @dataclass
 class BloomFilter:
     num_bits: int
@@ -79,27 +89,24 @@ class BloomFilter:
         return cls(((m + 63) // 64) * 64, k, seed)
 
     # -- hashing -------------------------------------------------------------
-    def _base_hashes(self, data: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(N, L) uint8 keys -> (h0, h1), the reference's exact two-hash
-        scheme (bloom/sketch.rs:494-510 compute_hash): h0 = xx(key, seed),
-        h1 = xx(key, h0) — the second pass is reseeded per key with the
-        first hash. Bit-compatible with reference-built filters."""
-        h0 = xxhash64_matrix(data, self.seed)
-        h1 = xxhash64_matrix(data, h0)
-        return h0, h1
-
     def _bit_positions(self, data: np.ndarray) -> np.ndarray:
+        return self._hash_positions(*base_hashes(data, self.seed))
+
+    def _hash_positions(self, h0: np.ndarray, h1: np.ndarray) -> np.ndarray:
         """(N, num_hashes) bit indices, Kirsch-Mitzenmacher with the
         reference's exact formula (bloom/sketch.rs:532-543): 1-based i,
         ((h0 + i*h1) >> 1) % num_bits (the shift improves distribution)."""
-        h0, h1 = self._base_hashes(data)
         i = np.arange(1, self.num_hashes + 1, dtype=np.uint64)
         return (((h0[:, None] + i[None, :] * h1[:, None])
                  >> np.uint64(1)) % np.uint64(self.num_bits))
 
     # -- ops -----------------------------------------------------------------
     def insert_keys(self, data: np.ndarray) -> "BloomFilter":
-        bits = self._bit_positions(data).ravel()
+        return self.insert_hashes(*base_hashes(data, self.seed))
+
+    def insert_hashes(self, h0: np.ndarray, h1: np.ndarray) -> "BloomFilter":
+        """Insert keys given by their ``base_hashes``."""
+        bits = self._hash_positions(h0, h1).ravel()
         np.bitwise_or.at(self.words, (bits >> np.uint64(6)).astype(np.int64),
                          np.uint64(1) << (bits & np.uint64(63)))
         return self

@@ -33,8 +33,9 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from datasketches_rust_spark.hashing import (DEFAULT_SEED, compute_seed_hash,
-                                             murmur128_bytes_list,
+from datasketches_rust_spark.hashing import (DEFAULT_SEED, _grouped_by_length,
+                                             compute_seed_hash,
+                                             murmur3_x64_128_matrix,
                                              murmur_h1_u64s)
 from datasketches_rust_spark.sketches import serde
 
@@ -102,8 +103,16 @@ class CountMinSketch:
         """Raw byte items (encode_values conventions) -> (num_hashes, N)
         bucket indices — the cross-impl path for string/typed items."""
         rows = np.empty((self.num_hashes, len(keys)), dtype=np.int64)
+        for grp, mat in _grouped_by_length(keys):
+            rows[:, grp] = self.bucket_rows(mat)
+        return rows
+
+    def bucket_rows(self, data: np.ndarray) -> np.ndarray:
+        """(N, L) uint8 key matrix -> (num_hashes, N) bucket indices:
+        each row's raw murmur h1 % num_buckets."""
+        rows = np.empty((self.num_hashes, len(data)), dtype=np.int64)
         for r in range(self.num_hashes):
-            h1, _ = murmur128_bytes_list(keys, int(self._row_seeds[r]))
+            h1, _ = murmur3_x64_128_matrix(data, int(self._row_seeds[r]))
             rows[r] = (h1 % np.uint64(self.num_buckets)).astype(np.int64)
         return rows
 
@@ -130,7 +139,13 @@ class CountMinSketch:
                     weights: np.ndarray | int = 1) -> "CountMinSketch":
         """Update with raw byte items — bit-parity with a reference
         sketch updated with the same raw_bytes/sign_extend encodings."""
-        return self._apply(self._buckets_keys(keys), weights, len(keys))
+        return self.update_buckets(self._buckets_keys(keys), weights)
+
+    def update_buckets(self, rows: np.ndarray,
+                       weights: np.ndarray | int = 1) -> "CountMinSketch":
+        """Update with items given by their (num_hashes, N)
+        ``bucket_rows``."""
+        return self._apply(rows, weights, rows.shape[1])
 
     def _estimate(self, rows: np.ndarray) -> np.ndarray:
         vals = np.stack([self.counts[r][rows[r]]

@@ -122,7 +122,12 @@ def coupons_from_keys(data: np.ndarray, lg_k: int,
                       seed: int = DEFAULT_SEED) -> tuple[np.ndarray, np.ndarray]:
     """(N, L) uint8 keys -> (slots, values). Vectorized coupon computation
     (hll/mod.rs:160-247): slot = h1 & (2^lg_k - 1), value = min(lz(h2),62)+1."""
-    h1, h2 = murmur3_x64_128_matrix(data, seed)
+    return coupons_from_hashes(*murmur3_x64_128_matrix(data, seed), lg_k)
+
+
+def coupons_from_hashes(h1: np.ndarray, h2: np.ndarray,
+                        lg_k: int) -> tuple[np.ndarray, np.ndarray]:
+    """murmur128 (h1, h2) -> (slots, values), as in ``coupons_from_keys``."""
     slots = (h1 & np.uint64((1 << lg_k) - 1)).astype(np.int64)
     values = np.minimum(clz64(h2), _VALUE_CAP).astype(np.uint8) + np.uint8(1)
     return slots, values

@@ -123,12 +123,22 @@ class ThetaSketch:
     # -- set ops -------------------------------------------------------------
     def union(self, other: "ThetaSketch") -> "ThetaSketch":
         """KMV union: theta <- min, merge sorted entries, trim to k."""
-        self._check_compat(other)
-        theta = min(self.theta, other.theta)
-        ent = np.union1d(self.entries, other.entries)
-        ent = ent[ent < theta]
-        out = ThetaSketch(lg_k=min(self.lg_k, other.lg_k), seed=self.seed,
-                          theta=theta, entries=ent)
+        return ThetaSketch.union_all([self, other])
+
+    @staticmethod
+    def union_all(sketches: list["ThetaSketch"]) -> "ThetaSketch":
+        """KMV union of any number of sketches in one pass: theta <- the
+        minimum theta, one sort-unique over every entry below it, trim to
+        the smallest k. The same state as folding ``union`` pairwise,
+        because each trim keeps exactly the smallest hashes."""
+        first = sketches[0]
+        for sk in sketches[1:]:
+            first._check_compat(sk)
+        theta = min(sk.theta for sk in sketches)
+        ent = np.unique(np.concatenate([sk.entries for sk in sketches]))
+        out = ThetaSketch(lg_k=min(sk.lg_k for sk in sketches),
+                          seed=first.seed, theta=theta,
+                          entries=ent[ent < theta])
         out._trim()
         return out
 

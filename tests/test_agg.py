@@ -207,3 +207,111 @@ def test_sql_udf_blob_consumers_null_semantics(spark):
         "       tdigest_quantile(CAST(NULL AS BINARY), 0.5) AS tq"
     ).first()
     assert row2["fe"] is None and row2["bc"] is None and row2["tq"] is None
+
+
+def test_bigint_values_with_a_null_hash_as_int64(spark):
+    """An Arrow batch of a bigint column that holds a NULL reaches pandas
+    as float64; its values must still hash as int64, like the batches
+    without a NULL, or one value gets two hashes."""
+    rows = [(i % 3, i % 1000) for i in range(4000)] + [(0, None)]
+    df = spark.createDataFrame(rows, "k int, v bigint").repartition(2)
+    exact = df.select(F.countDistinct("v")).first()[0]
+    est = agg.estimate_udf("theta", as_long=True, lg_k=16)
+    got = agg.sketch_agg(df, [], "v", "theta", lg_k=16).select(
+        est("sketch").alias("e")).first()["e"]
+    assert got == exact == 1000
+    per_key = {r["k"]: r["e"] for r in agg.sketch_agg(
+        df, ["k"], "v", "theta", lg_k=16).select(
+        "k", est("sketch").alias("e")).collect()}
+    assert per_key == {r["k"]: r["d"] for r in df.groupBy("k").agg(
+        F.countDistinct("v").alias("d")).collect()}
+
+
+def _reference_blob(kind: str, lg_k: int, values) -> bytes:
+    """One group's sketch built value by value from ``encode_values``
+    keys, the per-group build/update/serialize the batch path replaces."""
+    from datasketches_rust_spark.hashing import (encode_values,
+                                                 hash_bytes_list,
+                                                 murmur128_bytes_list)
+    from datasketches_rust_spark.sketches.cpc import CpcSketch
+    from datasketches_rust_spark.sketches.hll import (HllSketch,
+                                                      coupons_from_hashes)
+    from datasketches_rust_spark.sketches.theta import ThetaSketch
+
+    keys = encode_values(values.dropna())
+    if kind == "theta":
+        sk = ThetaSketch(lg_k=lg_k)
+        if keys:
+            sk.update_hashes(hash_bytes_list(keys))
+    elif kind == "hll":
+        sk = HllSketch(lg_k=lg_k)
+        if keys:
+            sk.update_coupons(*coupons_from_hashes(
+                *murmur128_bytes_list(keys), lg_k))
+    else:
+        sk = CpcSketch(lg_k=lg_k)
+        if keys:
+            sk.update_hashes(*murmur128_bytes_list(keys))
+    return sk.serialize()
+
+
+@pytest.mark.parametrize("kind", ["theta", "hll", "cpc"])
+@pytest.mark.parametrize("values", ["int", "float", "str"])
+def test_batch_partials_match_per_group_reference(kind, values):
+    """The one-sort keyed partial gives, per (k1, k2) group, the blob of
+    a per-group build/update/serialize — with a null in each key column
+    and a group whose values are all null (an empty sketch)."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(3)
+    n = 3000
+    k1 = rng.integers(0, 12, n).astype(float)
+    k1[rng.random(n) < 0.05] = np.nan
+    k2 = np.array(["a", "b", None], dtype=object)[rng.integers(0, 3, n)]
+    v = {"int": pd.Series(rng.integers(-10**12, 10**12, n)),
+         "float": pd.Series(rng.normal(size=n)),
+         "str": pd.Series([f"s{i}" * (i % 3 + 1) for i in
+                           rng.integers(0, 400, n)], dtype=object)}[values]
+    pdf = pd.DataFrame({"k1": k1, "k2": k2, "v": v})
+    if values != "int":  # an int column with a null arrives as float
+        pdf.loc[pdf["k1"] == 5, "v"] = None
+        pdf.loc[rng.random(n) < 0.05, "v"] = None
+    lg_k = 6  # small, so larger groups reach estimation mode
+
+    knd = agg.sketch_kind(kind, lg_k=lg_k)
+    out = agg._batch_partials(knd, pdf[["k1", "k2"]], pdf["v"],
+                              pdf["v"].notna().to_numpy())
+
+    def norm(key):
+        return tuple(None if pd.isna(x) else x for x in key)
+
+    want = {norm(key): _reference_blob(kind, lg_k, sub["v"]) for key, sub
+            in pdf.groupby(["k1", "k2"], dropna=False, sort=False)}
+    got = {norm(key): bytes(blob) for *key, blob in
+           out.itertuples(index=False)}
+    assert got == want
+    assert (None, None) in got
+    if values != "int":
+        empty = _reference_blob(kind, lg_k, pd.Series([], dtype=float))
+        assert all(got[key] == empty for key in got if key[0] == 5)
+
+
+def test_theta_merge_is_one_union_equal_to_the_pairwise_fold():
+    """``merge`` of many theta partials (some in estimation mode) gives
+    the bytes of folding ``union`` pairwise."""
+    import functools
+
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(9)
+    knd = agg.sketch_kind("theta", lg_k=7)
+    sketches = []
+    for size in (40, 3000, 5, 700, 0, 90, 128):
+        sk = knd.build()
+        knd.update(sk, pd.Series(rng.integers(0, 10**9, size)))
+        sketches.append(knd.deserialize(sk.serialize()))
+    fold = functools.reduce(lambda a, b: a.union(b), sketches)
+    assert knd.merge(sketches).serialize() == fold.serialize()
+    assert knd.merge(sketches[:1]) is sketches[0]

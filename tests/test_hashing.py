@@ -186,3 +186,62 @@ def test_encode_values_canonical_float():
     # a regular float is untouched
     pi, = encode_values([3.141592653589793])
     assert pi == struct.pack("<d", 3.141592653589793)
+
+
+@pytest.mark.parametrize("dtype", ["int8", "int16", "int32", "int64",
+                                   "uint8", "uint16", "uint32", "uint64",
+                                   "bool",
+                                   "float32", "float64"])
+def test_numeric_column_matches_encode_values(dtype):
+    """The vectorized numeric path (one (N, 8) matrix per column) gives
+    the bytes and the hashes of ``encode_values`` + the by-length kernel,
+    including -0.0, +-inf and NaN payloads for floats."""
+    import struct
+
+    from datasketches_rust_spark.hashing import (encode_numeric,
+                                                 encode_values,
+                                                 murmur128_bytes_list,
+                                                 murmur128_values)
+    rng = np.random.default_rng(11)
+    if dtype == "bool":
+        col = rng.integers(0, 2, 64).astype(bool)
+    elif np.dtype(dtype).kind == "f":
+        nans = [struct.unpack("<d", struct.pack("<Q", bits))[0]
+                for bits in (0x7FF8DEADBEEF0001, 0xFFF8000000000000,
+                             0x7FF0000000000001)]
+        with np.errstate(invalid="ignore", over="ignore"):
+            col = np.array([0.0, -0.0, np.inf, -np.inf, np.nan, *nans, 1.5,
+                            -2.25, 1e300, 5e-324, *rng.normal(size=40)],
+                           dtype=np.float64).astype(dtype)
+    else:
+        info = np.iinfo(dtype)
+        col = np.concatenate([
+            np.array([info.min, info.max, 0, 1], dtype=dtype),
+            rng.integers(info.min, info.max, 60, dtype=dtype)])
+    want = encode_values(col)
+    mat = encode_numeric(col)
+    assert [row.tobytes() for row in mat] == want
+    for seed in (9001, 0):
+        h1, h2 = murmur128_values(col, seed)
+        w1, w2 = murmur128_bytes_list(want, seed)
+        assert np.array_equal(h1, w1) and np.array_equal(h2, w2)
+
+
+def test_non_numeric_columns_take_the_encode_values_path():
+    """Strings, bytes and objects are hashed per value, as
+    ``encode_values`` encodes them."""
+    from datasketches_rust_spark.hashing import (encode_numeric,
+                                                 encode_values,
+                                                 murmur128_bytes_list,
+                                                 murmur128_values)
+    cols = [np.array(["a", "bb", "", "ccc"], dtype=object),
+            np.array([b"x", b"\x00\x00", b""], dtype=object),
+            [3, "3", 3.0, True]]
+    for col in cols:
+        if hasattr(col, "dtype"):
+            assert encode_numeric(np.asarray(col)) is None
+        h1, h2 = murmur128_values(col)
+        w1, w2 = murmur128_bytes_list(encode_values(col))
+        assert np.array_equal(h1, w1) and np.array_equal(h2, w2)
+    empty1, empty2 = murmur128_values(np.array([], dtype=object))
+    assert empty1.size == empty2.size == 0

@@ -13,6 +13,7 @@ Usage: python tools/explain_plans.py [> PLANS.md]
 from __future__ import annotations
 
 import io
+import math
 import re
 import sys
 from contextlib import redirect_stdout
@@ -21,6 +22,19 @@ sys.path.insert(0, "/root/repo")
 
 SF_DIR = "/root/testdata/sf0.01"
 
+
+_JOINS = r"(?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)"
+
+
+def _lowest_below(plan: str, lower: str, upper: str) -> bool:
+    """The lowest operator id of a node matching ``lower`` is smaller
+    than the lowest of one matching ``upper``: detail ids number leaves
+    lowest, so this reads "below in the tree". False when either node is
+    missing, so a plan that lost an operator fails the check by name."""
+    def lowest(op: str, default: float) -> float:
+        return min((int(m) for m in re.findall(rf"\((\d+)\) {op}", plan)),
+                   default=default)
+    return lowest(lower, math.inf) < lowest(upper, -1)
 
 
 def _n_nodes(plan: str, op: str) -> int:
@@ -673,9 +687,7 @@ def main() -> None:
         # the join (parent) BEFORE its aggregate children, but detail
         # ids number leaves lowest — "below the join" = smaller id
         "aggregate below the join (vocab-first discipline)":
-            lambda p: min(int(m) for m in
-                          re.findall(r"\((\d+)\) HashAggregate", p))
-            < int(re.search(r"\((\d+)\) \w*HashJoin", p).group(1)),
+            lambda p: _lowest_below(p, "HashAggregate", r"\w*HashJoin"),
         "levenshtein evaluated JVM-side (no Python)":
             lambda p: "EvalPython" not in p,
         "part scan pruned to p_name only":
@@ -1116,9 +1128,7 @@ def main() -> None:
         # so the partial (map-side) aggregate below the first exchange
         # has a smaller id — the scan(1)->HashAgg(2)->Exchange(3) chain
         "corpus collapses map-side (partial agg below the exchange)":
-            lambda p: min(int(m) for m in re.findall(
-                r"\((\d+)\) HashAggregate", p))
-            < min(int(m) for m in re.findall(r"\((\d+)\) Exchange", p)),
+            lambda p: _lowest_below(p, "HashAggregate", "Exchange"),
         "orders scan pruned to custkey+orderdate":
             lambda p: "o_totalprice" not in p and "o_orderstatus"
             not in p,
@@ -1301,9 +1311,7 @@ def main() -> None:
     ew = Q.q_ewma_daily_revenue(spark, SF_DIR)
     failures += audit("ewma_daily_revenue", ew, {
         "corpus collapses map-side (partial agg below the exchange)":
-            lambda p: min(int(m) for m in re.findall(
-                r"\((\d+)\) HashAggregate", p))
-            < min(int(m) for m in re.findall(r"\((\d+)\) Exchange", p)),
+            lambda p: _lowest_below(p, "HashAggregate", "Exchange"),
         "term array broadcast back (1-row build side)":
             lambda p: "BroadcastNestedLoopJoin" in p
             or "BroadcastExchange" in p,
@@ -1315,11 +1323,7 @@ def main() -> None:
     failures += audit("forecast_backtest_naive7", fb, {
         "lag joins run on the aggregated day table (no corpus "
         "self-join: partial agg below every join by operator id)":
-            lambda p: min(int(m) for m in re.findall(
-                r"\((\d+)\) HashAggregate", p))
-            < min(int(m) for m in re.findall(
-                r"\((\d+)\) (?:SortMergeJoin|BroadcastHashJoin|"
-                r"ShuffledHashJoin)", p)),
+            lambda p: _lowest_below(p, "HashAggregate", _JOINS),
         "no cartesian / nested-loop join":
             lambda p: "CartesianProduct" not in p
             and "BroadcastNestedLoopJoin" not in p,
@@ -1332,9 +1336,7 @@ def main() -> None:
         "exactly one exchange (the source rollup)":
             lambda p: _n_nodes(p, "Exchange") == 1,
         "partial aggregation below the exchange":
-            lambda p: min(int(m) for m in re.findall(
-                r"\((\d+)\) HashAggregate", p))
-            < min(int(m) for m in re.findall(r"\((\d+)\) Exchange", p)),
+            lambda p: _lowest_below(p, "HashAggregate", "Exchange"),
         "regex counts are JVM (no Python UDF)":
             lambda p: "EvalPython" not in p,
         "text never shuffles (counts computed in the scan stage)":
@@ -1376,9 +1378,7 @@ def main() -> None:
     hl = Q.q_holt_linear_daily(spark, SF_DIR)
     failures += audit("holt_linear_daily", hl, {
         "corpus collapses map-side (partial agg below the exchange)":
-            lambda p: min(int(m) for m in re.findall(
-                r"\((\d+)\) HashAggregate", p))
-            < min(int(m) for m in re.findall(r"\((\d+)\) Exchange", p)),
+            lambda p: _lowest_below(p, "HashAggregate", "Exchange"),
         "struct-accumulator fold is JVM (no Python UDF)":
             lambda p: "EvalPython" not in p,
     })
@@ -1387,11 +1387,7 @@ def main() -> None:
     failures += audit("revenue_autocorr", ac, {
         "lag joins run on the aggregated day table (partial agg "
         "below every join by operator id)":
-            lambda p: min(int(m) for m in re.findall(
-                r"\((\d+)\) HashAggregate", p))
-            < min(int(m) for m in re.findall(
-                r"\((\d+)\) (?:SortMergeJoin|BroadcastHashJoin|"
-                r"ShuffledHashJoin)", p)),
+            lambda p: _lowest_below(p, "HashAggregate", _JOINS),
         "lags dimension broadcasts":
             lambda p: "BroadcastExchange" in p
             or "BroadcastNestedLoopJoin" in p,
