@@ -44,8 +44,11 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     from pyspark.storagelevel import StorageLevel
     from datasketches_rust_spark.cache import release_tracked, track
 
-    sym = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-           .union(edges.select(F.col(dst).alias("s"), F.col(src).alias("d"))))
+    # both directions from ONE pass over the edge plan: a union of two
+    # selects would run everything upstream (verify UDF, LSH) twice
+    sym = edges.select(F.inline(F.array(
+        F.struct(F.col(src).alias("s"), F.col(dst).alias("d")),
+        F.struct(F.col(dst).alias("s"), F.col(src).alias("d")))))
     # serialized storage (pyspark's MEMORY_AND_DISK is the serialized
     # variant; the JVM localCheckpoint default is the DESER one): the
     # checkpoint is re-read 1-2x per round (own + msgs legs), and

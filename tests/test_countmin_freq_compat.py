@@ -172,6 +172,12 @@ class TestFrequenciesWire:
         back = FrequentItemsSketch.deserialize(buf)
         assert back.max_map_size == 64 and not back.counts
 
+    def test_empty_keeps_grown_lg_cur(self):
+        # an empty sketch whose map had grown (lg_cur 5 > LG_MIN 3) must
+        # round-trip byte-exact: the empty branch keeps lg_cur too
+        blob = bytes([1, 1, 10, 6, 5, 5])
+        assert FrequentItemsSketch.deserialize(blob).serialize() == blob
+
     def test_nonempty_layout_hand_assembled(self):
         sk = FrequentItemsSketch(64)
         sk.update_counts(["a", "bb", "a"], [1, 2, 3])

@@ -220,6 +220,40 @@ class TestConnectedComponentsConvergence:
             connected_components(edges, max_iter=3,
                                  shortcut_after=99).collect()
 
+    def test_edge_plan_evaluated_once(self, spark):
+        """Both edge directions come from one pass: a pandas UDF in the
+        edge plan (the verify UDF in the pipelines) sees each edge once,
+        not once per direction, and the labels stay those of union-find."""
+        import pandas as pd
+        from pyspark.sql import functions as F
+        from datasketches_rust_spark.operators.connected_components import \
+            connected_components
+        seen = spark.sparkContext.accumulator(0)
+
+        @F.pandas_udf("long")
+        def counted(s: pd.Series) -> pd.Series:
+            seen.add(len(s))
+            return s
+
+        n = 1000
+        edges = (spark.range(n, numPartitions=4)
+                 .select(counted(F.col("id")).alias("id_a"),
+                         ((F.col("id") * 7 + 3) % 1500).alias("id_b")))
+        got = {r.id: r.cluster_id for r in
+               connected_components(edges).collect()}
+        assert seen.value == n
+
+        parent: dict = {}
+
+        def find(x):
+            while parent.setdefault(x, x) != x:
+                x = parent[x]
+            return x
+        for a in range(n):
+            ra, rb = find(a), find((a * 7 + 3) % 1500)
+            parent[max(ra, rb)] = min(ra, rb)
+        assert got == {v: find(v) for v in parent}
+
 
 def test_lang_id_col_matches_udf(spark, sf_correct_dir):
     from datasketches_rust_spark.functions.text import (lang_id_col,
